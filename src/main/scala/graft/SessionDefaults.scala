@@ -3,13 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place owning the local-session tuning shared by the driver
-  * surfaces (Bench and Verify) — hand-syncing these configs across two
-  * builders already drifted once; a config added here is guaranteed to
-  * apply to both the measured plan and the oracle-checked plan. */
+  * surfaces (Bench, Verify, the runner CLI) and the test suites —
+  * hand-syncing these configs across builders already drifted once; a
+  * config added here is guaranteed to apply to the measured plan, the
+  * oracle-checked plan, the runner's per-file plan and the tested plan. */
 object SessionDefaults {
 
-  /** RAM-backed `spark.local.dir` for the harness JVMs (Bench, Verify,
-    * ScaleStress), when /dev/shm is writable with ≥ 32 GiB headroom.
+  /** RAM-backed `spark.local.dir` for the JVMs built here (Bench, Verify,
+    * ScaleStress, the runner, the tests), when /dev/shm is writable with
+    * ≥ 32 GiB headroom.
     *
     * Everything under spark.local.dir here is throwaway: shuffle files,
     * broadcast spills, and — the round-17 variance source — the RocksDB

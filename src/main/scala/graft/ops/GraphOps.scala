@@ -55,6 +55,16 @@ object GraphOps {
     pr
   }
 
+  /** The driver-path gate — shared with [[prebuildShared]] so the
+    * bench's shared-build step does not materialize a message base no
+    * query will read when the driver loop is active. */
+  private def pagerankLocalGate(s: org.apache.spark.sql.SparkSession,
+                                d: String): Boolean = {
+    val localMax = s.conf.get("spark.graft.pagerank.localMaxBytes",
+      String.valueOf(256L << 20)).toLong
+    localMax > 0 && inputBytes(s"$d/lineitem.parquet") <= localMax
+  }
+
   /** Driver-side twin of [[pagerank]] over the same derived graph —
     * exact by construction: every operation is int64 micro-unit
     * arithmetic (the object scaladoc's determinism argument), and the
@@ -68,16 +78,6 @@ object GraphOps {
     * unionAll exactly; the round recurrence pr' = 150000 +
     * (85 · Σ (pr DIV outdeg)) DIV 100 uses Java long division =
     * Spark's DIV on the (always positive) operands. */
-  /** The driver-path gate — shared with [[prebuildShared]] so the
-    * bench's shared-build step does not materialize a message base no
-    * query will read when the driver loop is active. */
-  private def pagerankLocalGate(s: org.apache.spark.sql.SparkSession,
-                                d: String): Boolean = {
-    val localMax = s.conf.get("spark.graft.pagerank.localMaxBytes",
-      String.valueOf(256L << 20)).toLong
-    localMax > 0 && inputBytes(s"$d/lineitem.parquet") <= localMax
-  }
-
   private def pagerankLocal(s: org.apache.spark.sql.SparkSession,
                             d: String): DataFrame = {
     // RAW pair collect + driver-side dedup: the distributed distinct

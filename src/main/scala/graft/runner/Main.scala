@@ -9,6 +9,7 @@ import scala.util.{Failure, Random, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionDefaults
 import graft.io.Metrics
 
 /** CLI-parity runner (SURVEY.md §2.1 A12–A18, §3.1): the reference harness's
@@ -27,12 +28,16 @@ import graft.io.Metrics
   *   - stderr stat block shaped like runner.cc:343–358.
   *
   * Architectural translation (not a port): the reference runs one fresh
-  * single-threaded DuckDB per file on a pthread pool; here one shared
-  * SparkSession serves j concurrent driver-side Futures, and Spark's own
-  * scheduler parallelizes within each query. S3 access goes through s3a
-  * (path-style, plain http — reference runner.cc:205–217). At cluster scale
-  * the same binary handles thousands of files: each file-query is an
-  * independent job, so executors stay saturated as long as ≥j files remain.
+  * single-threaded DuckDB per file on a pthread pool (runner.cc:197–201);
+  * here one shared SparkSession, built from [[graft.SessionDefaults]],
+  * serves j concurrent driver-side Futures. A small file runs as one fused
+  * task — scan, aggregate and sort in one exchange-free stage
+  * (graft.plans.TinyAggSingularize, TinySortSingularize) — the analogue of
+  * the reference's one-thread engine, while a large file keeps the
+  * parallel exchange plan. S3 access goes through s3a (path-style, plain
+  * http — reference runner.cc:205–217). At cluster scale the same binary
+  * handles thousands of files: each file-query is an independent job, so
+  * executors stay saturated as long as ≥j files remain.
   */
 object Main {
 
@@ -94,7 +99,7 @@ object Main {
     * parquet source: 6-predicate open-interval filter, group, min×4 + avg,
     * ORDER BY the avg NULLS LAST. Applied to the reference's Laghos schema
     * when present, else retargeted at the testdata lineitem schema. */
-  private def flagship(df: DataFrame): DataFrame = {
+  private[graft] def flagship(df: DataFrame): DataFrame = {
     val cols = df.columns.toSet
     if (Set("vertex_id", "x", "y", "z", "e").subsetOf(cols))
       df.filter(col("x") > 1.5 && col("x") < 1.6 &&
@@ -134,19 +139,18 @@ object Main {
     }
   }
 
-  /** Run one file's query; streams result batches to stdout (A11) and
-    * returns the hit count. */
+  /** Run one file's query; prints result chunks to stdout (A11) and
+    * returns the hit count. `collect()` runs the result job inside the
+    * query's SQL execution (`toLocalIterator`'s jobs run after it ends); a
+    * large file's parallel result arrives whole, not a partition at a time. */
   private def runOne(spark: SparkSession, source: String): Long = {
     val path = source.stripPrefix("'").stripSuffix("'")
     val result = flagship(spark.read.parquet(path))
     val fields = result.schema.fields
-    var hits = 0L
-    val it = result.toLocalIterator()
+    val rows = result.collect()
     // 2048 = DuckDB's STANDARD_VECTOR_SIZE, the reference's chunk size.
-    val batch = new scala.collection.mutable.ArrayBuffer[
-      org.apache.spark.sql.Row](2048)
-    def flush(): Unit = if (batch.nonEmpty) {
-      // One columnar chunk per flush, mirroring the reference's
+    rows.grouped(2048).foreach { batch =>
+      // One columnar chunk per batch, mirroring the reference's
       // chunk-at-a-time print of DataChunk::ToString() (reference
       // runner.cc:219–227; format in reference README.md:78–83): a
       // header line, then one `- FLAT <TYPE>: n = [ v, v, …]` line per
@@ -157,26 +161,23 @@ object Main {
       // concurrent files can't interleave into each other's chunk.
       val text = new StringBuilder
       text.append(s"Chunk - [${fields.length} Columns]\n")
-      var c = 0
-      while (c < fields.length) {
+      fields.indices.foreach { c =>
         val vals = batch.map(r =>
           if (r.isNullAt(c)) "NULL" else r.get(c).toString)
         text.append(s"- FLAT ${duckTypeName(fields(c).dataType)}: ")
-          .append(batch.size).append(" = [ ")
+          .append(batch.length).append(" = [ ")
           .append(vals.mkString(", ")).append("]\n")
-        c += 1
       }
       System.out.synchronized { print(text.toString) }
-      batch.clear()
     }
-    while (it.hasNext) {
-      batch += it.next()
-      hits += 1
-      if (batch.size >= 2048) flush()
-    }
-    flush()
-    hits
+    rows.length.toLong
   }
+
+  /** Session width: N of a local SPARK_MASTER, else the JVM's cores. */
+  private[graft] def cpusOf(master: Option[String]): String = master.collect {
+    case "local" => "1"
+    case s"local[$n]" if n.nonEmpty && n.forall(_.isDigit) => n
+  }.getOrElse(Runtime.getRuntime.availableProcessors.toString)
 
   def main(args: Array[String]): Unit = {
     val opts = parse(args.toList, Opts())
@@ -186,18 +187,16 @@ object Main {
       .toVector
     val shuffled = new Random(1).shuffle(sources)
 
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-runner")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    s3aConfigs(opts).foreach { case (k, v) => builder.config(k, v) }
-    ghttpConfigs(opts).foreach { case (k, v) => builder.config(k, v) }
+    val master = sys.env.get("SPARK_MASTER")
+    val builder =
+      SessionDefaults.builder(cpusOf(master)).appName("graft-runner")
+    master.foreach(builder.master)
     // the plain-HTTP monitored object profile (graft.io.GraftHttpFileSystem)
     // — ghttp:// sources count every ranged GET and its wire bytes, the
     // reference's read-op semantics (runner.cc:75–172)
-    builder.config("spark.hadoop.fs.ghttp.impl",
-                   "graft.io.GraftHttpFileSystem")
+    (s3aConfigs(opts) ++ ghttpConfigs(opts) :+
+      ("spark.hadoop.fs.ghttp.impl" -> "graft.io.GraftHttpFileSystem"))
+      .foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new Metrics

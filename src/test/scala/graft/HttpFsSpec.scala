@@ -44,12 +44,14 @@ object TestHttpObjectServer {
                 ex.getResponseHeaders.add(
                   "Content-Range", s"bytes $lo-$hi/${bytes.length}")
                 ex.sendResponseHeaders(206, chunk.length)
-                ex.getResponseBody.write(chunk)
+                // counted before the write: a client that closes early
+                // makes the write fail, but the range was still granted
                 bytesServed.foreach(_.addAndGet(chunk.length.toLong))
+                ex.getResponseBody.write(chunk)
               case None =>
                 ex.sendResponseHeaders(200, bytes.length)
-                ex.getResponseBody.write(bytes)
                 bytesServed.foreach(_.addAndGet(bytes.length.toLong))
+                ex.getResponseBody.write(bytes)
             }
         }
       } finally ex.close() // every path, or keep-alive clients stall
@@ -130,6 +132,49 @@ class HttpFsSpec extends SparkTestBase {
       server.stop(0)
       spark.sparkContext.hadoopConfiguration.unset("fs.ghttp.auth.id")
       spark.sparkContext.hadoopConfiguration.unset("fs.ghttp.auth.secret")
+    }
+  }
+
+  test("a short sequential read after a seek costs one small window") {
+    val dir = Files.createTempDirectory("ghttp_window_")
+    val blob = new Array[Byte](4 << 20)
+    new scala.util.Random(7).nextBytes(blob)
+    Files.write(dir.resolve("blob.bin"), blob)
+    val wire = new java.util.concurrent.atomic.AtomicLong(0L)
+    val server = serve(dir.toString, bytesServed = Some(wire))
+    try {
+      val conf = new org.apache.hadoop.conf.Configuration()
+      conf.set("fs.ghttp.impl", "graft.io.GraftHttpFileSystem")
+      conf.setBoolean("fs.ghttp.impl.disable.cache", true)
+      val path = new org.apache.hadoop.fs.Path(
+        s"ghttp://127.0.0.1:${server.getAddress.getPort}/blob.bin")
+      val fs = path.getFileSystem(conf)
+      val in = fs.open(path)
+      val first = 1 << 20
+      // a dictionary-page-sized read: one GET, at most the first window
+      val small = new Array[Byte](300)
+      in.seek(first)
+      in.readFully(small)
+      assert(java.util.Arrays.equals(small,
+        java.util.Arrays.copyOfRange(blob, first, first + 300)))
+      in.seek(0)  // closes the window before the wire count is read
+      assert(wire.get <= GraftHttpFileSystem.FirstWindow,
+        s"${wire.get} B on the wire for a 300-byte read")
+      // a long sequential read grows the window: 64 KiB, 128, 256, 512,
+      // then 1 MiB windows — exact bytes, few GETs
+      val (ops0, _, _) = GraftHttpFileSystem.snapshot
+      val rest = new Array[Byte](blob.length - first)
+      in.seek(first)
+      in.readFully(rest)
+      in.close()
+      val (ops1, _, _) = GraftHttpFileSystem.snapshot
+      assert(java.util.Arrays.equals(rest,
+        java.util.Arrays.copyOfRange(blob, first, blob.length)))
+      assert(ops1 - ops0 == 7, s"${ops1 - ops0} GETs for 3 MiB read in order")
+      fs.close()
+    } finally {
+      server.stop(0)
+      Scratch.deleteRecursively(dir)
     }
   }
 

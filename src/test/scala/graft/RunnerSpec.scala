@@ -2,6 +2,22 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+/** Counts the jobs that run inside SQL executions and prints the count
+  * to stderr when the application ends; the CLI tests attach it to the
+  * spawned runner through `-Dspark.extraListeners`. Jobs outside any
+  * execution (parquet schema inference) are not the query's. */
+class SqlJobCounter extends org.apache.spark.scheduler.SparkListener {
+  private val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+  override def onJobStart(
+      e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    if (Option(e.properties)
+        .exists(_.getProperty("spark.sql.execution.id") != null))
+      jobs.incrementAndGet()
+  override def onApplicationEnd(
+      e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+    System.err.println(s"[sql-jobs] ${jobs.get}")
+}
+
 /** Runner-harness semantics without spawning the CLI: seeded shuffle
   * determinism (SURVEY.md §2.1 A17) and the Laghos-schema flagship shape. */
 class RunnerSpec extends SparkTestBase {
@@ -62,6 +78,15 @@ class RunnerSpec extends SparkTestBase {
       Main.Opts(None, None, "127.0.0.1", 9000, 4))
   }
 
+  test("SPARK_MASTER alone sets the session width") {
+    import graft.runner.Main
+    val cores = Runtime.getRuntime.availableProcessors.toString
+    assert(Main.cpusOf(Some("local[2]")) == "2")
+    assert(Main.cpusOf(Some("local")) == "1")
+    assert(Main.cpusOf(Some("local[*]")) == cores)
+    assert(Main.cpusOf(None) == cores)
+  }
+
   test("opts map to the s3a session config block") {
     import graft.runner.Main
     val conf = Main.s3aConfigs(
@@ -103,7 +128,8 @@ class RunnerSpec extends SparkTestBase {
     try {
       val port = server.getAddress.getPort
       val (code, outS, e) = spawnRunner(Seq("-j", "2"),
-        s"ghttp://127.0.0.1:$port/lineitem.parquet\n")
+        s"ghttp://127.0.0.1:$port/lineitem.parquet\n",
+        Seq("-Dspark.extraListeners=graft.SqlJobCounter"))
       val out = new StringBuilder(outS)
       assert(code == 0, s"exit=$code stderr:\n${e.takeRight(2000)}")
       assert(e.contains("Number data sources (parquet files): 1"))
@@ -115,6 +141,10 @@ class RunnerSpec extends SparkTestBase {
       assert(opsLine.get.stripPrefix("Total read ops: ").trim.toLong > 0)
       assert(e.contains("Done"))
       assert(out.toString.linesIterator.exists(_.startsWith("Chunk - [5 Columns]")))
+      // the runner's session plans a small file as one fused job, and the
+      // result is fetched inside that query's SQL execution
+      assert(e.linesIterator.contains("[sql-jobs] 1"),
+        s"expected one SQL job for one small file:\n${e.takeRight(2000)}")
     } finally server.stop(0)
   }
 
@@ -146,7 +176,7 @@ class RunnerSpec extends SparkTestBase {
   test("credentialed fan-out (j>1): stat-block bytes reconcile with wire truth") {
     // The last untested corner of the A2 credential surface: -i/-k under
     // PARALLEL per-file fan-out, with the stat block's byte count checked
-    // against what the server actually wrote to the wire. Wire truth has
+    // against the bytes the server granted per range. Wire truth has
     // a documented slack: every sequential GET is bounded by the
     // readahead window (fs.ghttp.readahead.bytes — pinned small here),
     // so the server may push at most one window per counted op beyond
@@ -196,14 +226,58 @@ class RunnerSpec extends SparkTestBase {
       (2, 1.5, 1.55, 1.55, 5.0),    // x on boundary → excluded
       (3, 1.55, 1.55, 1.55, 1.0)    // inside, smaller avg → first
     ).toDF("vertex_id", "x", "y", "z", "e")
-    val got = df.filter($"x" > 1.5 && $"x" < 1.6 &&
-                        $"y" > 1.5 && $"y" < 1.6 &&
-                        $"z" > 1.5 && $"z" < 1.6)
-      .groupBy($"vertex_id")
-      .agg(min($"vertex_id").as("VID"), avg($"e").as("E"))
-      .select("VID", "E")
-      .orderBy(asc_nulls_last("E"))
-      .as[(Int, Double)].collect()
-    assert(got.toSeq == Seq((3, 1.0), (1, 15.0)))
+    val got = graft.runner.Main.flagship(df)
+      .as[(Int, Double, Double, Double, Double)].collect()
+    assert(got.toSeq == Seq((3, 1.55, 1.55, 1.55, 1.0),
+                            (1, 1.55, 1.55, 1.55, 15.0)))
+  }
+
+  test("flagship on a small file: one exchange-free stage, one job") {
+    val sc = spark.sparkContext
+    // job-start events arrive on the listener bus after the action
+    // returns; a marker job, posted later on the same queue, shows when
+    // every earlier one has been seen
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def counted[T](body: => T): (T, Int) = {
+      groups.clear()
+      sc.setJobGroup("runner-flagship", "flagship")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup("marker", "marker")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("marker"), "listener never saw the marker job")
+      (out, groups.toArray.count(_ == "runner-flagship"))
+    }
+    def run(): (String, Seq[org.apache.spark.sql.Row], Int) = {
+      val df = graft.runner.Main.flagship(
+        spark.read.parquet(s"$sf0001/lineitem.parquet"))
+      val (rows, jobs) = counted(df.collect().toSeq)
+      (df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head, rows, jobs)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (fused, rows, jobs) = run()
+      assert(!fused.contains("Exchange"), s"small file kept an exchange:\n$fused")
+      assert(jobs == 1, s"$jobs jobs for one small file:\n$fused")
+      assert(rows.nonEmpty)
+      // with the size guard at zero the exchange plan stands, same rows
+      spark.conf.set("spark.graft.tinyAgg.maxBytes", "0")
+      try {
+        val (parallel, rows0, _) = run()
+        assert(parallel.contains("Exchange hashpartitioning"),
+          s"guarded-off plan lost its exchange:\n$parallel")
+        assert(rows0.map(_.toString).sorted == rows.map(_.toString).sorted)
+      } finally spark.conf.unset("spark.graft.tinyAgg.maxBytes")
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -6,19 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session across all suites (JVM-wide, cheap to reuse). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions { e =>
-        e.injectOptimizerRule(_ => graft.plans.RangeJoinBinning)
-        e.injectOptimizerRule(_ => graft.plans.TinyAggSingularize)
-        e.injectRuntimeOptimizerRule(_ =>
-          graft.plans.TinySortSingularize)
-      }
-      .getOrCreate()
+    // The drivers' own session recipe, so the tests plan what they ship.
+    val s = SessionDefaults.builder("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // The suites run many throwaway stream queries through one JVM-wide
     // session — opt in to the harness-only per-query stream teardown
